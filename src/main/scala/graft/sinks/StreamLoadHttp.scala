@@ -17,11 +17,11 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * still a failure (the warehouse reports load errors in-band).
   *
   * Retry idempotency: labels are deterministic per (db, tb, batch,
-  * chunk). A retried PUT after a transient network failure reuses the
-  * label; if the first attempt actually committed, the warehouse
-  * answers `Label Already Exists` with `ExistingJobStatus=FINISHED`,
-  * which [[checkResponse]] accepts as success — the public stream-load
-  * exactly-once contract.
+  * partition, chunk, op). A retried PUT after a transient network
+  * failure reuses the label; if the first attempt actually committed,
+  * the warehouse answers `Label Already Exists` with
+  * `ExistingJobStatus=FINISHED`, which [[checkResponse]] accepts as
+  * success — the public stream-load exactly-once contract.
   *
   * Scale shape: executors PUT their own partitions' chunks directly
   * (sinkFactory runs inside foreachPartition) — the driver never sees
@@ -45,10 +45,15 @@ object StreamLoadHttp {
     * warehouse's Label-Already-Exists dedup would silently drop every
     * partition after the first. A task RE-attempt re-PUTs the same
     * partition under the same labels, which is exactly the dedup we
-    * want.
+    * want. A non-empty `op` ends the label for the same reason: the
+    * upsert and `__op='delete'` PUTs of one table, batch and partition
+    * are different loads; upsert labels carry no suffix.
     */
-  def label(cfg: Config, batchId: Long, part: Int, chunk: Int): String =
-    s"graft-${cfg.db}-${cfg.tb}-$batchId-$part-$chunk"
+  def label(cfg: Config, batchId: Long, part: Int, chunk: Int,
+      op: String = ""): String = {
+    val base = s"graft-${cfg.db}-${cfg.tb}-$batchId-$part-$chunk"
+    if (op.isEmpty) base else s"$base-$op"
+  }
 
   /** Build the stream-load PUT — starrocks_sinker.rs:233-277. `op` is
     * "" for upsert batches, "delete" for hard-delete batches (the
@@ -65,7 +70,7 @@ object StreamLoadHttp {
       "format" -> "json",
       "strip_outer_array" -> "true",
       "timezone" -> "UTC",
-      "label" -> label(cfg, batchId, part, chunk))
+      "label" -> label(cfg, batchId, part, chunk, op))
     val headers =
       if (op.nonEmpty) base + ("columns" -> s"__op='$op'") else base
     Request("PUT",
@@ -136,8 +141,8 @@ object StreamLoadHttp {
   final class HttpPayloadSink(cfg: Config, batchId: Long,
       op: String = "", retries: Int = 1)
       extends StreamLoadSink.PayloadSink {
-    // Partition discriminator for labels: ship() builds one sink per
-    // partition inside foreachPartition, so TaskContext is live here;
+    // Partition discriminator for labels: shipRouted() builds each sink
+    // inside foreachPartition, so TaskContext is live here;
     // 0 when constructed driver-side (tests, single-writer callers).
     private val part =
       Option(org.apache.spark.TaskContext.get()).map(_.partitionId())

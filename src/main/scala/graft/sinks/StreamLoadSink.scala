@@ -27,9 +27,14 @@ object StreamLoadSink {
     */
   def withSignColumns(df: DataFrame, rowType: Column,
       version: Column): DataFrame =
-    df.withColumn(IsDeletedCol,
-        when(rowType === "delete", lit(1)).otherwise(lit(0)))
-      .withColumn(VersionCol, version)
+    df.select(col("*") +: signColumns(rowType, version): _*)
+
+  /** The two annotation columns, named, for projections that build the
+    * payload struct themselves.
+    */
+  def signColumns(rowType: Column, version: Column): Seq[Column] =
+    Seq(when(rowType === "delete", lit(1)).otherwise(lit(0))
+      .as(IsDeletedCol), version.as(VersionCol))
 
   /** Render one partition's rows as a JSON-lines payload (the stream-load
     * body). Uses to_json on a struct of all columns — codegen, no UDF.
@@ -43,7 +48,20 @@ object StreamLoadSink {
   }
 
   /** Ship a batch: render JSON, group into chunks per partition
-    * bounded by BOTH row count and payload bytes, push each chunk.
+    * bounded by BOTH row count and payload bytes, push each chunk. The
+    * single-sink form of [[shipRouted]].
+    */
+  def ship(df: DataFrame, sinkFactory: () => PayloadSink,
+      batchRows: Int = 10000,
+      batchBytes: Long = Long.MaxValue): Unit =
+    shipRouted(jsonPayload(df).select(lit(0), col("payload")),
+      _ => sinkFactory(), batchRows, batchBytes)
+
+  /** Ship rendered lines to several sinks in one job: `lines` holds
+    * (sink index: int, JSON line: string). Inside each partition one
+    * sink per index is built on its first line, and each sink chunks
+    * its own lines, so its chunk counter (and with it the stream-load
+    * label) is shared by every source that routes to it.
     *
     * The byte bound is the reference's `batch_memory_mb`
     * (sinker_config.rs): a row-count cap alone lets a batch of wide
@@ -52,28 +70,40 @@ object StreamLoadSink {
     * you don't control. A single over-wide row still ships alone (the
     * cap flushes BEFORE adding, never splits a row).
     */
-  def ship(df: DataFrame, sinkFactory: () => PayloadSink,
+  def shipRouted(lines: DataFrame, sinkFor: Int => PayloadSink,
       batchRows: Int = 10000,
       batchBytes: Long = Long.MaxValue): Unit =
-    jsonPayload(df).foreachPartition {
+    lines.foreachPartition {
       it: Iterator[org.apache.spark.sql.Row] =>
-        val sink = sinkFactory()
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        var bytes = 0L
-        def flush(): Unit = if (buf.nonEmpty) {
-          sink.put(buf.toSeq); buf.clear(); bytes = 0L
+        val open = scala.collection.mutable.HashMap.empty[Int, Chunker]
+        it.foreach { r =>
+          open.getOrElseUpdate(r.getInt(0),
+            new Chunker(sinkFor(r.getInt(0)), batchRows, batchBytes))
+            .add(r.getString(1))
         }
-        it.map(_.getString(0)).foreach { line =>
-          // Cap on the ENCODED size: the request body ships UTF-8, so
-          // counting UTF-16 chars undercounts CJK/emoji text by up to
-          // ~3-4x and defeats the memory cap.
-          val lineBytes = line
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-          if (buf.size >= batchRows ||
-            (buf.nonEmpty && bytes + lineBytes > batchBytes)) flush()
-          buf += line
-          bytes += lineBytes
-        }
-        flush()
+        open.toSeq.sortBy(_._1).foreach(_._2.flush())
     }
+
+  /** One sink's pending chunk within a partition. */
+  private final class Chunker(sink: PayloadSink, batchRows: Int,
+      batchBytes: Long) {
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    private var bytes = 0L
+
+    def add(line: String): Unit = {
+      // Cap on the ENCODED size: the request body ships UTF-8, so
+      // counting UTF-16 chars undercounts CJK/emoji text by up to
+      // ~3-4x and defeats the memory cap.
+      val lineBytes =
+        line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+      if (buf.size >= batchRows ||
+        (buf.nonEmpty && bytes + lineBytes > batchBytes)) flush()
+      buf += line
+      bytes += lineBytes
+    }
+
+    def flush(): Unit = if (buf.nonEmpty) {
+      sink.put(buf.toSeq); buf.clear(); bytes = 0L
+    }
+  }
 }

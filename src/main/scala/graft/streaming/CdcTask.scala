@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
+  StringType, StructField, StructType}
 
 import graft.config.TaskConfig
 import graft.infra.{Heartbeat, Monitoring}
@@ -15,9 +16,9 @@ import graft.sources.{DbResumer, PgOutput, PgSlotLifecycle}
   * pg→starrocks story (docs/en/cdc/, wired in
   * /root/reference/dt-task/src/task_runner.rs:153-263 as
   * extractor→pipeline→parallelizer→sinker): slot lifecycle plan →
-  * pgoutput v2 stream decode → per-transaction batching → compaction →
-  * stream-load ship, with resume positions, heartbeats, and monitor
-  * counters recorded at every batch boundary.
+  * pgoutput v2 stream decode → per-transaction batching → batch-wide
+  * compaction → stream-load ship, with resume positions, heartbeats,
+  * and monitor counters recorded at every batch boundary.
   *
   * The PG socket answers (slot status, publication existence, the framed
   * COPY-BOTH byte stream) arrive as [[PgAnswers]] — the one transport
@@ -28,10 +29,14 @@ import graft.sources.{DbResumer, PgOutput, PgSlotLifecycle}
   * Batches break only at transaction boundaries (the reference drains
   * whole txns into a batch before sinking — base_pipeline.rs:96-191), so
   * a recorded position is always a commit end and a restart never
-  * replays half a transaction. At cluster scale the same
-  * [[shipBatch]] body runs as the `foreachBatch` of the
-  * [[graft.sources.ChangelogSource]] DSv2 stream; this orchestrator is
-  * the single-stream task form with explicit position bookkeeping.
+  * replays half a transaction. Each batch is one DataFrame across all
+  * of its tables: one batch-wide compaction, then one ship job that
+  * routes every line to its destination table's sink (the reference's
+  * one merge and parallel sink per drained batch, rdb_merger.rs). At
+  * cluster scale the same [[shipBatch]] body runs as the
+  * `foreachBatch` of the [[graft.sources.ChangelogSource]] DSv2 stream;
+  * this orchestrator is the single-stream task form with explicit
+  * position bookkeeping.
   */
 object CdcTask {
 
@@ -86,7 +91,7 @@ object CdcTask {
     * the resume LSN as their position).
     */
   private def txnGroups(events: Seq[(Int, ChangeEvent)],
-      commitEnds: Seq[String]): Seq[(String, Seq[ChangeEvent])] =
+      commitEnds: IndexedSeq[String]): Seq[(String, Seq[ChangeEvent])] =
     events.groupBy(_._1).toSeq.sortBy(_._1).map { case (k, evs) =>
       val end =
         if (k < commitEnds.size) commitEnds(k)
@@ -114,11 +119,6 @@ object CdcTask {
     out.result()
   }
 
-  /** Ship one batch: per routed table, build the typed frame in the
-    * relation's wire column order, compact to final per-key state, and
-    * push sign+version-annotated JSON lines through the payload sink.
-    * Returns rows shipped per table.
-    */
   /** Sink factory: (schema, tb, batchId, op) — `op` is "" for
     * upsert/soft-delete batches and "delete" for hard-delete batches
     * (the stream-load `columns: __op='delete'` header,
@@ -127,77 +127,114 @@ object CdcTask {
   type SinkFactory =
     (String, String, Long, String) => StreamLoadSink.PayloadSink
 
+  /** One source table of a batch: the wire columns it ships, its key
+    * columns, and where the router sends both.
+    */
+  private final case class TablePlan(cols: Seq[String], keys: Seq[String],
+      routedCols: Seq[String], dest: (String, String))
+
+  /** The batch frame: `_t` source-table ordinal, `_k` key values (null
+    * when any is null — compaction's serial lane), `_v` kept wire
+    * columns in wire order, `row_type`, and the batch-global `_seq`.
+    */
+  private val BatchSchema = StructType(Seq(
+    StructField("_t", IntegerType, nullable = false),
+    StructField("_k", ArrayType(StringType)),
+    StructField("_v", ArrayType(StringType)),
+    StructField("row_type", StringType),
+    StructField("_seq", LongType, nullable = false)))
+
+  /** Ship one batch as one frame, whatever the number of tables in it
+    * (the reference merges a drained batch once and sinks it in
+    * parallel — rdb_merger.rs:17-143): one compaction over
+    * (`_t`, `_k`) to final per-key state, then one ship job that
+    * renders each table's sign+version-annotated JSON line in its
+    * routed column names and sends it to the sink of its
+    * (destination table, op). Returns events shipped per destination
+    * table.
+    */
   def shipBatch(spark: SparkSession, task: TaskConfig.Task,
       batchId: Long, events: Seq[ChangeEvent],
       relCols: Map[(String, String), Seq[String]],
       relKeys: Map[(String, String), Seq[String]],
       sinkFor: SinkFactory)
       : Map[(String, String), Long] = {
-    events.zipWithIndex.groupBy { case (e, _) => (e.schema, e.tb) }
-      .map { case ((s, tb), evs) =>
-        val wireCols = relCols.getOrElse((s, tb),
-          evs.head._1.keyImage.keys.toSeq.sorted)
-        val keys = task.keysByTable.get(tb)
-          .orElse(relKeys.get((s, tb)).filter(_.nonEmpty))
-          .getOrElse(wireCols.take(1))
-        // ignore_cols applies to the CDC lane too (the same json:
-        // filter config as snapshot) — key columns never drop
-        val ignored = task.ignoreColsByTable.getOrElse((s, tb), Nil)
-        val cols = wireCols.filter(c =>
-          keys.contains(c) || !ignored.contains(c))
-        val (toSchema, toTb) = task.router.routeTable(s, tb)
-        val routedCols =
-          cols.map(c => task.router.routeColumn(s, tb, c))
-        val routedKeys =
-          keys.map(c => task.router.routeColumn(s, tb, c))
-        val schema = StructType(
-          routedCols.map(StructField(_, StringType)) ++
-            Seq(StructField("row_type", StringType),
-              StructField("_seq", LongType)))
-        val rows = evs.map { case (e, i) =>
-          val img =
-            if (e.rowType == "delete") e.before else e.after
-          Row.fromSeq(cols.map(c => img.get(c).orNull) ++
-            Seq(e.rowType, i.toLong))
-        }
-        // partitions follow [pipeline] parallel_size (bounded by the
-        // row count): each partition ships through its own payload
-        // sink, so this is the PUT parallelism per table per batch
-        val slices = math.max(1,
-          math.min(task.parallelism, rows.size / 100 + 1))
-        val df = spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, slices), schema)
-        val compacted = Compaction.compact(df, routedKeys,
-          Seq("_seq"), col("row_type"))
-        val batchBytes = task.sink.batchMemoryMb
-          .map(_.toLong * 1024 * 1024).getOrElse(Long.MaxValue)
-        if (task.sink.hardDelete) {
-          // hard delete: deletes ship as their own PUTs under
-          // `__op='delete'`, upserts raw — no sign/version columns
-          // (the table has no soft-delete sign). Compaction leaves at
-          // most one action per key, so the two PUT groups never
-          // race on a key.
-          val raw = compacted.drop(Compaction.ActionCol)
-          StreamLoadSink.ship(
-            raw.filter(col("row_type") =!= "delete")
-              .drop("row_type", "_seq"),
-            () => sinkFor(toSchema, toTb, batchId, ""),
-            task.batchSize, batchBytes)
-          StreamLoadSink.ship(
-            raw.filter(col("row_type") === "delete")
-              .drop("row_type", "_seq"),
-            () => sinkFor(toSchema, toTb, batchId, "delete"),
-            task.batchSize, batchBytes)
-        } else {
-          val signed = StreamLoadSink.withSignColumns(compacted,
-              col("row_type"), col("_seq"))
-            .drop("row_type", "_seq", Compaction.ActionCol)
-          StreamLoadSink.ship(signed,
-            () => sinkFor(toSchema, toTb, batchId, ""),
-            task.batchSize, batchBytes)
-        }
-        (toSchema, toTb) -> evs.size.toLong
+    if (events.isEmpty) return Map.empty
+    val tables = events.iterator.map(e => (e.schema, e.tb)).distinct
+      .toVector
+    val plans = tables.map { case (s, tb) =>
+      val wireCols = relCols.getOrElse((s, tb), events
+        .find(e => e.schema == s && e.tb == tb).get
+        .keyImage.keys.toSeq.sorted)
+      val keys = task.keysByTable.get(tb)
+        .orElse(relKeys.get((s, tb)).filter(_.nonEmpty))
+        .getOrElse(wireCols.take(1))
+      // ignore_cols applies to the CDC lane too (the same json:
+      // filter config as snapshot) — key columns never drop
+      val ignored = task.ignoreColsByTable.getOrElse((s, tb), Nil)
+      val cols = wireCols.filter(c =>
+        keys.contains(c) || !ignored.contains(c))
+      TablePlan(cols, keys,
+        cols.map(c => task.router.routeColumn(s, tb, c)),
+        task.router.routeTable(s, tb))
+    }
+    val ordinal = tables.zipWithIndex.toMap
+    val rows = events.iterator.zipWithIndex.map { case (e, i) =>
+      val t = ordinal((e.schema, e.tb))
+      val img = if (e.rowType == "delete") e.before else e.after
+      val k = plans(t).keys.map(c => img.get(c).orNull)
+      Row(t, if (k.contains(null)) null else k,
+        plans(t).cols.map(c => img.get(c).orNull), e.rowType, i.toLong)
+    }.toVector
+    // partitions follow [pipeline] parallel_size (bounded by the row
+    // count); after compaction every partition ships through its own
+    // payload sinks
+    val slices = math.max(1,
+      math.min(task.parallelism, rows.size / 100 + 1))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, slices), BatchSchema)
+    val compacted = Compaction.compact(df, Seq("_t", "_k"),
+      Seq("_seq"), col("row_type"))
+
+    // hard delete: deletes ship as their own PUTs under
+    // `__op='delete'`, upserts raw — no sign/version columns (the table
+    // has no soft-delete sign). Compaction leaves at most one action
+    // per key, so the two PUT groups never race on a key.
+    val hardDelete = task.sink.hardDelete
+    val ops = if (hardDelete) Seq("", "delete") else Seq("")
+    // one sink per (destination, op): sources that tb_map routes to
+    // one target share its chunk counter, so their labels never collide
+    val sinks = plans.map(_.dest).distinct
+      .flatMap { case (s, tb) => ops.map(op => (s, tb, op)) }.toVector
+    val sinkIndex = sinks.zipWithIndex.toMap
+    def byTable(f: TablePlan => Column): Column =
+      plans.indices.tail.foldLeft(when(col("_t") === 0, f(plans.head))) {
+        (c, t) => c.when(col("_t") === t, f(plans(t)))
       }
+    def sinkOf(op: String): Column = byTable(p =>
+      lit(sinkIndex((p.dest._1, p.dest._2, op))))
+    val sinkCol =
+      if (hardDelete) when(col("row_type") === "delete", sinkOf("delete"))
+        .otherwise(sinkOf(""))
+      else sinkOf("")
+    val signCols =
+      if (hardDelete) Nil
+      else StreamLoadSink.signColumns(col("row_type"), col("_seq"))
+    val lineCol = byTable(p => to_json(struct(
+      p.routedCols.zipWithIndex.map { case (c, j) =>
+        col("_v").getItem(j).as(c)
+      } ++ signCols: _*)))
+    val batchBytes = task.sink.batchMemoryMb
+      .map(_.toLong * 1024 * 1024).getOrElse(Long.MaxValue)
+    StreamLoadSink.shipRouted(compacted.select(sinkCol, lineCol),
+      i => {
+        val (s, tb, op) = sinks(i)
+        sinkFor(s, tb, batchId, op)
+      },
+      task.batchSize, batchBytes)
+
+    events.groupMapReduce(e => plans(ordinal((e.schema, e.tb))).dest)(
+      _ => 1L)(_ + _)
   }
 
   /** Run the task end-to-end over one captured stream. */
@@ -236,10 +273,11 @@ object CdcTask {
     val relKeys = msgs.collect { case (_, r: PgOutput.Relation) =>
       (r.namespace, r.name) -> r.columns.filter(_.keyPart).map(_.name)
     }.toMap
+    // indexed once: txnGroups looks up one commit end per transaction
     val commitEnds = msgs.collect {
       case (_, c: PgOutput.Commit) => PgOutput.renderLsn(c.endLsn)
       case (_, sc: PgOutput.StreamCommit) => PgOutput.renderLsn(sc.endLsn)
-    }
+    }.toVector
     val all = PgOutput.toChangeEventsIndexed(msgs, startLsn)
 
     // 3. pre-seek at transaction granularity: a replayed transaction is

@@ -26,30 +26,44 @@ class CdcTaskSpec extends SparkSuite {
 
   private val mapper = new ObjectMapper()
 
-  /** Loopback warehouse collecting stream-load PUT bodies. */
+  /** Loopback warehouse collecting stream-load PUT bodies. Labels
+    * dedup the way a warehouse's do: a PUT under a label that already
+    * loaded answers `Label Already Exists` (FINISHED) and loads nothing.
+    */
   private final class Warehouse {
+    /** Bodies of the PUTs that loaded. */
     val bodies = mutable.ArrayBuffer.empty[String]
+    /** The label of every PUT received, loaded or deduplicated. */
     val labels = mutable.ArrayBuffer.empty[String]
-    /** The `columns` header per PUT ("" when absent) — hard-delete
-      * batches carry `__op='delete'` there.
+    /** The `columns` header per loaded PUT ("" when absent) —
+      * hard-delete batches carry `__op='delete'` there.
       */
     val ops = mutable.ArrayBuffer.empty[String]
+    private val loaded = mutable.Set.empty[String]
     private val server =
       HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = try {
         val body = new String(ex.getRequestBody.readAllBytes(),
           StandardCharsets.UTF_8)
-        synchronized {
-          bodies += body
-          Option(ex.getRequestHeaders.getFirst("Label"))
-            .foreach(labels += _)
-          ops += Option(ex.getRequestHeaders.getFirst("columns"))
-            .getOrElse("")
+        val label =
+          Option(ex.getRequestHeaders.getFirst("Label")).getOrElse("")
+        val fresh = synchronized {
+          labels += label
+          val isNew = loaded.add(label)
+          if (isNew) {
+            bodies += body
+            ops += Option(ex.getRequestHeaders.getFirst("columns"))
+              .getOrElse("")
+          }
+          isNew
         }
-        val reply =
-          """{"Status":"Success","NumberLoadedRows":1}"""
-            .getBytes(StandardCharsets.UTF_8)
+        val reply = (if (fresh)
+            """{"Status":"Success","NumberLoadedRows":1}"""
+          else
+            """{"Status":"Label Already Exists",""" +
+              """"ExistingJobStatus":"FINISHED"}""")
+          .getBytes(StandardCharsets.UTF_8)
         ex.sendResponseHeaders(200, reply.length.toLong)
         val os = ex.getResponseBody
         try os.write(reply) finally os.close()
@@ -408,6 +422,47 @@ class CdcTaskSpec extends SparkSuite {
       // the config listed it
       assert(rows.forall(!_.contains("amount")))
       assert(rows.forall(_.contains("id")))
+    } finally wh.stop()
+  }
+
+  test("two relations routed to one table share its sinks: every " +
+      "label is distinct and no row is lost to label dedup") {
+    val wh = new Warehouse
+    try {
+      val task = TaskConfig.fromIni(ini(wh.port).replace(
+        "db_map=public:dw",
+        "db_map=public:dw\ntb_map=public.orders_old:dw.orders_cdc"))
+      val w = new PgOutputWriter()
+      Seq(101L -> "orders_cdc", 102L -> "orders_old").foreach {
+        case (rel, name) =>
+          w.relation(rel, "public", name, 'd', Seq(
+            graft.sources.PgOutput.RelColumn("id", keyPart = true,
+              20, -1),
+            graft.sources.PgOutput.RelColumn("amount", keyPart = false,
+              1700, -1)))
+      }
+      // one txn, one batch: both sources land in the same ship job
+      w.begin(0x17000100L, 1000L, 801L)
+      w.insert(101L, Array("1", "10.00"))
+      w.insert(102L, Array("10", "100.00"))
+      w.insert(101L, Array("2", "20.00"))
+      w.insert(102L, Array("11", "110.00"))
+      w.commit(0x17000100L, 0x17000200L, 1000L)
+      val port = wh.port
+      val r = CdcTask.run(spark, task,
+        CdcTask.PgAnswers(
+          graft.sources.PgSlotLifecycle.SlotStatus(exists = false),
+          pubExists = false, walStream = w.bytes()),
+        (db, tb, batchId, op) => new StreamLoadHttp.HttpPayloadSink(
+          StreamLoadHttp.Config("127.0.0.1", port, db, tb,
+            "root", ""), batchId, op),
+        dual(new MemStore, java.nio.file.Files
+          .createTempDirectory("cdc-task-m2o").toString))
+      assert(r.batches.map(_.tables) == Seq(Seq("dw.orders_cdc")))
+      assert(r.rowsShipped == 4L)
+      val labels = wh.synchronized(wh.labels.toSeq)
+      assert(labels.distinct == labels, s"colliding labels: $labels")
+      assert(wh.rows.map(_("id")).sorted == Seq("1", "10", "11", "2"))
     } finally wh.stop()
   }
 
