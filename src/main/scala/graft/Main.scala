@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.config.{TaskConfig, TaskRunner}
 import graft.infra.Monitoring
 
@@ -16,15 +14,7 @@ object Main {
     val configText = java.nio.file.Files.readString(configPath)
     val task = TaskConfig.fromIni(configText,
       Option(configPath.toAbsolutePath.getParent))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-task")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-task")
     // [metrics] section → monitors + /metrics server, the reference's
     // prometheus exposition loop (dumped per task step + at exit)
     // counter window from [pipeline] counter_time_window_secs

@@ -29,10 +29,6 @@ class FsDisciplineSpec extends AnyFunSuite {
       "driver gate main: local outDir contract with the test driver",
     "Bench.scala" ->
       "driver bench main: local result JSON",
-    "LanderDrill.scala" ->
-      "driver bench main: local temp table dirs it drills against",
-    "config/ResidencyDrill.scala" ->
-      "driver bench main: local temp task/capture dirs it ages",
     "TaskCli.scala" ->
       "CLI entry: local task dirs on the operator's machine",
     "config/TaskConfig.scala" ->
@@ -57,30 +53,27 @@ class FsDisciplineSpec extends AnyFunSuite {
         "design (s3a has no append); the PUBLISHED path goes " +
         "through Fs"))
 
-  private def mainSources: Seq[java.io.File] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    walk(new java.io.File("src/main/scala"))
-  }
+  import FsDisciplineSpec.{code, mainSources}
 
   test("local-FS APIs appear only in whitelisted driver-local files") {
     val offenders = mainSources.flatMap { f =>
       val rel = f.getPath.replace("src/main/scala/graft/", "")
-      val text = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      // strip line comments and scaladoc so prose mentions don't count
-      val code = text.linesIterator
-        .filterNot(l => l.trim.startsWith("//") ||
-          l.trim.startsWith("*") || l.trim.startsWith("/*"))
-        .mkString("\n")
+      val text = code(f)
       val hits = Seq("java.io.File", "java.nio.file.")
-        .filter(code.contains)
+        .filter(text.contains)
       if (hits.isEmpty || whitelist.contains(rel)) None
       else Some(s"$rel uses ${hits.mkString(",")} — convert to " +
         "graft.infra.Fs or whitelist with a reason")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("every whitelisted file exists") {
+    // a stale exemption must not outlive its file: a new file at the
+    // same path would inherit the exemption unreviewed
+    val stale = whitelist.keys.filterNot(rel =>
+      new java.io.File(s"src/main/scala/graft/$rel").isFile)
+    assert(stale.isEmpty, s"whitelisted but missing: ${stale.mkString(", ")}")
   }
 
   test("task-path modules are fully on the Hadoop FS API") {
@@ -97,14 +90,9 @@ class FsDisciplineSpec extends AnyFunSuite {
       "sources/WarcSource.scala")      // crawl segment ingestion
     taskPathModules.foreach { rel =>
       assert(!whitelist.contains(rel), s"$rel must not be whitelisted")
-      val text = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"src/main/scala/graft/$rel")), "UTF-8")
-      val code = text.linesIterator
-        .filterNot(l => l.trim.startsWith("//") ||
-          l.trim.startsWith("*") || l.trim.startsWith("/*"))
-        .mkString("\n")
+      val text = code(new java.io.File(s"src/main/scala/graft/$rel"))
       Seq("java.io.File", "java.nio.file.").foreach { api =>
-        assert(!code.contains(api), s"$rel still uses $api")
+        assert(!text.contains(api), s"$rel still uses $api")
       }
     }
   }
@@ -138,4 +126,25 @@ class FsDisciplineSpec extends AnyFunSuite {
     Fs.writeString(s"$dir/sub/a.log", "x")
     assert(Fs.readString(s"$dir/sub/a.log") == "x")
   }
+}
+
+object FsDisciplineSpec {
+
+  /** Every Scala file under src/main. */
+  def mainSources: Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    walk(new java.io.File("src/main/scala"))
+  }
+
+  /** A source file's text without line comments and scaladoc, so prose
+    * mentions of a forbidden API don't count.
+    */
+  def code(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      .linesIterator
+      .filterNot(l => l.trim.startsWith("//") ||
+        l.trim.startsWith("*") || l.trim.startsWith("/*"))
+      .mkString("\n")
 }

@@ -166,6 +166,10 @@ class LandedTableSpec extends SparkSuite {
     // Spark's own size estimate, so disable auto-broadcast here to
     // observe the unforced plan (at real catch-up sizes the estimate
     // itself exceeds autoBroadcastJoinThreshold)
+    // save and restore the threshold: unsetting it would drop the
+    // shared session's setting back to Spark's default for every
+    // later suite
+    val oldThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("graft.landed.broadcast_delta_bytes", "1")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -180,7 +184,7 @@ class LandedTableSpec extends SparkSuite {
       assert(state(t) == Map("1" -> "a2", "2" -> "b", "3" -> "c"))
     } finally {
       spark.conf.unset("graft.landed.broadcast_delta_bytes")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", oldThreshold)
     }
   }
 

@@ -10,21 +10,5 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // a loaded box (or a long GC pause on a busy executor) must not
-      // tear the session down: the local heartbeat shares one JVM, so
-      // an expiry is always a false positive here — seen once when a
-      // concurrent DuckDB sweep starved the driver for >120s
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.build("graft-test", n = 4)
 }
